@@ -3,6 +3,14 @@
 local[N] stands in for an N-executor cluster in this sandbox; the knobs that
 matter at real scale (AQE, skew-join splitting, Arrow) are on here so the same
 plan shape survives a 1000-executor deployment.
+
+The driver heap (``spark.driver.memory``, the JVM's ``-Xmx``) defaults to half
+of the host's physical memory, floored to whole GiB and at least ``1g``
+(:func:`driver_memory`): the heap, the JVM's off-heap memory (Arrow, netty,
+metaspace) and the Python Arrow workers must all fit in RAM together.  A heap
+larger than RAM lets G1 grow the resident set past physical memory before it
+feels any pressure, and the kernel's OOM killer then ends the JVM.  Set
+``SPARK_DRIVER_MEM`` (e.g. ``SPARK_DRIVER_MEM=24g``) to override the default.
 """
 
 from __future__ import annotations
@@ -10,6 +18,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def driver_memory() -> str:
+    """The ``spark.driver.memory`` that :func:`get_spark` applies:
+    ``SPARK_DRIVER_MEM`` when set, else half of the host's physical memory,
+    floored to whole GiB and at least ``1g``."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return os.environ.get("SPARK_DRIVER_MEM") or f"{max(1, phys // 2 // 2**30)}g"
 
 
 def get_spark(
@@ -49,7 +65,7 @@ def get_spark(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "128m"),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
     )
     # Streaming state at deployment scale: the default HDFS-backed store
