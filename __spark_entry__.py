@@ -273,7 +273,7 @@ def _q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """General (mixed-arity) path forced: distributed cell classification +
+    """General (mixed-arity) path forced: driver-side cell classification +
     Arrow ray-cast refine."""
     return pip_join(
         src.geo_points(spark, sf_dir, _GEO_TABLE),

@@ -1,5 +1,6 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
+local[$SPARK_GRAFT_CPUS] (default: the host's os.cpu_count()); prints ONE
+JSON line.
 
 Metric (BASELINE.json): spatial-join + tile-assignment throughput in
 docs/sec over the lineitem-derived point table.  "value" is total wall
@@ -198,7 +199,7 @@ def main() -> None:
         scaling_mode()
         return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
     spark = get_spark(app_name="dsi-bench", cores=cpus, shuffle_partitions=cpus)
@@ -402,8 +403,8 @@ def main() -> None:
         spark.sql("DROP TABLE IF EXISTS bench_knn_pts")
         shutil.rmtree(knnl_dir, ignore_errors=True)
     # general mixed-arity path (bits=9: interior-cell fast path +
-    # distributed query-cell classification; faster than 10 at this
-    # polygon size — A/B best-of-3: 4.5 vs 5.8)
+    # driver-side query-cell classification; bits=9 was faster than 10 at
+    # this polygon size — A/B best-of-3: 4.5 vs 5.8)
     timed("pip_join", lambda: pip_join(
         pts, triangle_polygons(kq), bits=9, unroll_arity=None))
     # fixed-arity codegen even-odd: the whole ray-cast in codegen, no Arrow

@@ -11,7 +11,8 @@ Rows:
   volume; VERDICT r5 ask #6).
 
 Methodology matches bench.py: noop sink, warm run, best-of-N, one JSON
-line at the end.  Reads $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS.
+line at the end.  Reads $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS (default:
+the host's os.cpu_count()).
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ def _materialize(df) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     spark = get_spark(app_name="dsi-bench-extra", cores=cpus,
                       shuffle_partitions=cpus)

@@ -190,18 +190,22 @@ def capped_shingles(
     pair sharing them becomes a candidate); at web scale capping is what
     keeps the join linear-ish.  Jaccard is then defined over the CAPPED
     sets, consistently in signatures and verification."""
-    sh = shingles(docs, n, text_col)
+    # NULL text explodes to one NULL shingle per doc: drop it, or every
+    # null-text doc shares one minhash signature and LSH bucket (O(D^2)
+    # candidates), and the anti-join below would keep it (NULL never
+    # matches the hot set) where the keep-set semi-join dropped it.
+    sh = shingles(docs, n, text_col).filter(F.col("shingle").isNotNull())
     if max_df is None:
         return sh
     # Broadcast the HOT tail and anti-join, rather than broadcasting the
     # keep set: df <= max_df keeps almost every distinct shingle (the cap
     # only exists to drop the stopword tail), so the keep-side broadcast
     # was corpus-vocabulary-sized — a driver collect + per-executor hash
-    # relation that grows with the corpus.  The over-cap set is the tiny
-    # complement (shingles shared by > max_df docs), bounded by
-    # n_docs / max_df regardless of vocabulary size.  Equivalent rows:
-    # shingles are never NULL (explode skips null texts), so anti-join on
-    # the complement == semi-join on the keep set.
+    # relation that grows with the corpus.  The over-cap set is the small
+    # complement (shingles shared by > max_df docs), bounded by total
+    # shingle rows / max_df (~ n_docs * shingles-per-doc / max_df),
+    # independent of vocabulary size.  With NULLs gone, anti-join on the
+    # complement == semi-join on the keep set.
     df_counts = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     hot = df_counts.filter(F.col("df") > max_df).select("shingle")
     return sh.join(F.broadcast(hot), "shingle", "left_anti")

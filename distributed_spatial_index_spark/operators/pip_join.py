@@ -10,8 +10,12 @@ matching stops at epsilon-MBR — SURVEY.md §2.6).  Classic filter-refine:
             (mapInPandas) — one pass per polygon over the batch's candidate
             points, no per-row Python.
 
-Polygons are query-side metadata (small); they travel to executors as a
-Spark broadcast variable keyed by query_id, so candidate rows stay narrow
+Polygons are query-side metadata (small): one bounded collect brings them
+to the driver, which pads them into a (query_ids, n_vertices, vertices)
+tensor, explodes each bbox to its covering cells and classifies every cell
+interior/boundary in NumPy.  The classified cells return to Spark through
+Arrow as the broadcast build side, and the tensor travels to executors as a
+Spark broadcast variable, so candidate rows stay narrow
 (cell, doc_id, x, y, query_id).
 """
 
@@ -26,9 +30,10 @@ from pyspark.sql import functions as F
 
 from distributed_spatial_index_spark.config import DEFAULT_REGION, JOIN_BITS, Region
 from distributed_spatial_index_spark.functions.cells import (
+    cell_coord_np,
     cell_id_col,
     covering_cells_col,
-    morton_decode_np,
+    morton_np,
 )
 
 # Polygons are query-side metadata collected to the driver (broadcast to
@@ -59,18 +64,20 @@ def ray_cast_np(px: np.ndarray, py: np.ndarray, verts: np.ndarray) -> np.ndarray
     return inside
 
 
-def _pad_polys(polys: dict) -> tuple[list, np.ndarray, np.ndarray]:
-    """Pad a {query_id: (n,2) verts} dict to (qids, nv[Q], verts[Q,maxV,2])."""
-    qids_sorted = sorted(polys)
-    nv = np.array([len(polys[q]) for q in qids_sorted], dtype=np.int64)
-    maxv = int(nv.max()) if len(nv) else 0
-    verts = np.zeros((len(qids_sorted), maxv, 2))
-    for i, q in enumerate(qids_sorted):
-        verts[i, : nv[i]] = polys[q]
-    return qids_sorted, nv, verts
+def _polygon_tensor(rows: list) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Collected (query_id, vertices) rows -> (qids sorted, nv[Q],
+    verts[Q,maxV,2]), each ring zero-padded past its nv vertices."""
+    rows = sorted(rows, key=lambda r: r[0])
+    rings = [r[1] or () for r in rows]
+    nv = np.array([len(ring) for ring in rings], dtype=np.int64)
+    verts = np.zeros((len(rows), int(nv.max()) if len(nv) else 0, 2))
+    verts[np.arange(verts.shape[1]) < nv[:, None]] = np.array(
+        [(v[0], v[1]) for ring in rings for v in ring], dtype=float
+    ).reshape(-1, 2)
+    return np.array([r[0] for r in rows], dtype=np.int64), nv, verts
 
 
-def _poly_index_np(qids_sorted: list, qcol: np.ndarray) -> np.ndarray:
+def _poly_index_np(qids_sorted: np.ndarray, qcol: np.ndarray) -> np.ndarray:
     """Vectorized query_id -> polygon-tensor row index: binary search over
     the sorted id array instead of a per-row Python dict lookup (the dict
     comprehension was ~1 us/row of pure Python on the refine's multi-
@@ -162,49 +169,23 @@ def _classify_cells_np(
     return corners_in & ~edge_hits
 
 
-def _classified_query_cells_df(
-    polygons: DataFrame, bc, bits: int, region: Region
-) -> DataFrame:
-    """DISTRIBUTED build of the classified (query, cell) routing table:
-    bbox + covering-cell explode stay in whole-stage codegen; the
-    interior/boundary classification runs over the exploded rows in
-    Arrow-batched mapInPandas against the broadcast polygon tensor.  Finer
-    ``bits`` only widens the exploded frame across executors — no driver
-    pandas table, no task-size cliff (round-2 verdict ask #5)."""
-    vx = F.transform(F.col("vertices"), lambda v: v["x"])
-    vy = F.transform(F.col("vertices"), lambda v: v["y"])
-    exploded = polygons.select(
-        "query_id",
-        F.array_min(vx).alias("xmin"), F.array_min(vy).alias("ymin"),
-        F.array_max(vx).alias("xmax"), F.array_max(vy).alias("ymax"),
-    ).withColumn(
-        "cell",
-        F.explode(covering_cells_col(
-            F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
-            bits=bits, region=region,
-        )),
-    )
-
-    def classify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_sorted, nv, verts = _pad_polys(bc.value)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            qi = _poly_index_np(qids_sorted, pdf["query_id"].to_numpy())
-            cx, cy = morton_decode_np(pdf["cell"].to_numpy(), bits)
-            interior = _classify_cells_np(qi, cx, cy, nv, verts, bits, region)
-            out = pdf[["query_id", "cell", "xmin", "ymin", "xmax", "ymax"]].copy()
-            out["interior"] = interior
-            yield out[["query_id", "cell", "interior",
-                       "xmin", "ymin", "xmax", "ymax"]]
-
-    return exploded.mapInPandas(
-        classify,
-        schema=(
-            "query_id long, cell long, interior boolean, "
-            "xmin double, ymin double, xmax double, ymax double"
-        ),
-    )
+def _covering_cells_np(
+    xmin: np.ndarray, ymin: np.ndarray, xmax: np.ndarray, ymax: np.ndarray,
+    bits: int, region: Region,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """NumPy twin of covering_cells_col: (rect index, cx, cy) for every grid
+    cell each rect covers, in the same cx-major order.  cell_coord_np is the
+    IEEE formula of cell_coord_col, so the Morton ids of these cells match
+    the point side's cell_id_col bit for bit."""
+    cx0 = cell_coord_np(xmin, region.x_lo, region.width, bits)
+    cx1 = cell_coord_np(xmax, region.x_lo, region.width, bits)
+    cy0 = cell_coord_np(ymin, region.y_lo, region.height, bits)
+    cy1 = cell_coord_np(ymax, region.y_lo, region.height, bits)
+    ny = cy1 - cy0 + 1
+    cnt = (cx1 - cx0 + 1) * ny
+    row = np.repeat(np.arange(len(cnt)), cnt)
+    k = np.arange(len(row)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    return row, cx0[row] + k // ny[row], cy0[row] + k % ny[row]
 
 
 def _fixed_arity_query_cells(
@@ -318,20 +299,40 @@ def pip_join(
     group dedup is needed).  Pass ``None`` to force the general path, or
     an int to skip the detection query.
 
+    The general path and "auto" read the polygon frame ONCE, through the
+    bounded guard collect; its rows decide the arity route.  Only a table
+    past MAX_DRIVER_POLYGONS falls back to a distinct-sizes query, since
+    there the unrolled path can still serve it and the general path raises.
+
     General path (arity too varied/large to unroll): broadcast (query,
-    covering-cell) equi-join, with cells classified interior/boundary
-    DISTRIBUTED (bbox explode in codegen + Arrow-batched classification;
-    see _classified_query_cells_df).  Points in interior cells are emitted
-    directly inside whole-stage codegen; only boundary-cell candidates
-    cross Arrow into the NumPy ray-cast refine.
+    covering-cell) equi-join, with the cells exploded and classified
+    interior/boundary on the driver in NumPy from the collected polygons
+    (the broadcast gathers this table on the driver anyway).  Points in
+    interior cells are emitted directly inside whole-stage codegen; only
+    boundary-cell candidates cross Arrow into the NumPy ray-cast refine.
     """
-    if unroll_arity == "auto":
-        sizes = sorted(
-            r["n"]
-            for r in polygons.select(
-                F.size("vertices").alias("n")
-            ).distinct().collect()
+    rows = None
+    if not unroll_arity or unroll_arity == "auto":
+        # one bounded collect serves the guard, the arity detection and the
+        # routing table: the limit caps what can reach the driver, and
+        # overflow past the cap raises (general path) before anything is
+        # broadcast
+        rows = (
+            polygons.select("query_id", "vertices")
+            .limit(MAX_DRIVER_POLYGONS + 1)
+            .collect()
         )
+    fits = rows is not None and len(rows) <= MAX_DRIVER_POLYGONS
+    if unroll_arity == "auto":
+        if fits:
+            sizes = sorted({len(r["vertices"] or ()) for r in rows})
+        else:
+            sizes = sorted(
+                r["n"]
+                for r in polygons.select(
+                    F.size("vertices").alias("n")
+                ).distinct().collect()
+            )
         if (
             1 < len(sizes) <= MAX_UNROLL_GROUPS
             and sizes[-1] <= MAX_UNROLL_ARITY
@@ -358,39 +359,35 @@ def pip_join(
         return unrolled_raycast_pip_join(
             points, polygons, int(unroll_arity), bits, region
         )
-
-    spark = points.sparkSession
-
-    # one driver action for guard + collect (was a count job THEN a collect
-    # job): the limit caps what can reach the driver, and overflow past the
-    # cap raises before anything is broadcast
-    poly_rows = (
-        polygons.select("query_id", "vertices")
-        .limit(MAX_DRIVER_POLYGONS + 1)
-        .collect()
-    )
-    if len(poly_rows) > MAX_DRIVER_POLYGONS:
+    if not fits:
         raise ValueError(
             f"pip_join collects polygons to the driver as query metadata; "
             f"got > MAX_DRIVER_POLYGONS={MAX_DRIVER_POLYGONS}. "
             "Use convex_pip_join (fully distributed) or raise the guard."
         )
-    polys = {
-        r["query_id"]: np.array([(v["x"], v["y"]) for v in r["vertices"]])
-        for r in poly_rows
-    }
-    bc = spark.sparkContext.broadcast(polys)
 
-    # lazy localCheckpoint: qcells feeds BOTH union branches below, and
-    # Catalyst pushes each branch's (interior / ~interior) filter into its
-    # own BroadcastExchange subtree — no ReusedExchange — so without the
-    # barrier the Arrow-batched classification (and the polygon-table
-    # scan under it) runs twice per action.  The frame is metadata-scale
-    # (covering cells of the polygon bboxes), so checkpointing it is
-    # cheap and the classify runs once.  Measured plan: MapInPandas 3 -> 2.
-    qcells = _classified_query_cells_df(
-        polygons, bc, bits, region
-    ).localCheckpoint(eager=False)
+    spark = points.sparkSession
+    qids, nv, verts = _polygon_tensor(rows)
+    # driver-side routing table: bbox -> covering cells -> interior flag.
+    # Rings without vertices have no bbox and cover no cell.
+    has = np.flatnonzero(nv > 0)
+    valid = np.arange(verts.shape[1]) < nv[has, None]
+    lo = np.where(valid[..., None], verts[has], np.inf).min(axis=1)
+    hi = np.where(valid[..., None], verts[has], -np.inf).max(axis=1)
+    row, cx, cy = _covering_cells_np(
+        lo[:, 0], lo[:, 1], hi[:, 0], hi[:, 1], bits, region
+    )
+    qi = has[row]
+    interior = _classify_cells_np(qi, cx, cy, nv, verts, bits, region)
+    cells = pd.DataFrame({
+        "query_id": qids[qi], "cell": morton_np(cx, cy, bits),
+        "xmin": lo[row, 0], "ymin": lo[row, 1],
+        "xmax": hi[row, 0], "ymax": hi[row, 1],
+    })
+    schema = "query_id long, cell long, xmin double, ymin double, xmax double, ymax double"
+    qc_int = spark.createDataFrame(cells[interior], schema)
+    qc_bnd = spark.createDataFrame(cells[~interior], schema)
+    bc = spark.sparkContext.broadcast((qids, nv, verts))
 
     pts = points.withColumn("cell", cell_id_col(F.col("x"), F.col("y"), bits, region))
     # The interior/boundary routing is applied to the (tiny, broadcast)
@@ -400,8 +397,6 @@ def pip_join(
     # two branches emitted 13M joined rows EACH (26M emissions for 13M
     # candidates).  Joining each branch against only its own slice of the
     # classified cells emits each candidate exactly once across branches.
-    qc_int = qcells.filter(F.col("interior")).drop("interior")
-    qc_bnd = qcells.filter(~F.col("interior")).drop("interior")
     # in-region guard: cell ids clamp out-of-region points into edge cells,
     # so "point is in an interior cell" only implies "inside the polygon"
     # for points geometrically inside their cell (the refine path re-checks
@@ -420,29 +415,29 @@ def pip_join(
         .select("query_id", F.col("id").alias("doc_id"))
     )
     # JVM-side bbox prefilter cuts the Arrow transfer into the Python
-    # refine to points that can possibly be inside the polygon.  The
-    # second branch keeps the old semantics for clamped out-of-region
-    # points landing in interior cells: they must be refined exactly, not
-    # emitted directly (normally empty; the broadcast of qc_int is reused
-    # from the direct branch).
+    # refine to points that can possibly be inside the polygon.
     refine_cols = ["query_id", F.col("id").alias("doc_id"), "x", "y"]
-    boundary = (
-        pts.join(F.broadcast(qc_bnd), "cell")
-        .filter(bbox)
-        .select(*refine_cols)
-        .unionByName(
+    boundary = pts.join(F.broadcast(qc_bnd), "cell").filter(bbox).select(*refine_cols)
+    # Clamped out-of-region points landing in interior cells must be
+    # refined exactly, not emitted directly.  They can only land in the
+    # grid's edge row or column, so the branch exists only when some
+    # interior cell lies there (the broadcast of qc_int is reused from the
+    # direct branch); otherwise it is provably empty and would only double
+    # the refine's Python tasks.
+    n = 1 << bits
+    if (interior & ((cx == 0) | (cx == n - 1) | (cy == 0) | (cy == n - 1))).any():
+        boundary = boundary.unionByName(
             pts.join(F.broadcast(qc_int), "cell")
             .filter(~in_region & bbox)
             .select(*refine_cols)
         )
-    )
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Vectorized across the WHOLE batch, not per query: polygons are
-        # padded to a [Q, maxV, 2] tensor once, rows gather their polygon by
-        # query index, and the even-odd rule runs as maxV (<= a dozen)
-        # NumPy passes over the full batch.
-        qids_sorted, nv, verts = _pad_polys(bc.value)
+        # Vectorized across the WHOLE batch, not per query: rows gather
+        # their polygon from the broadcast [Q, maxV, 2] tensor by query
+        # index, and the even-odd rule runs as maxV (<= a dozen) NumPy
+        # passes over the full batch.
+        qids_sorted, nv, verts = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue

@@ -66,21 +66,29 @@ def test_shingles_vs_duckdb(spark, ddb):
     assert_same_rows(got, rows)
 
 
-def test_capped_shingles_anti_join_equals_keep_filter(corpus):
+def test_capped_shingles_anti_join_equals_keep_filter(spark, corpus):
     """capped_shingles (broadcast-hot anti-join since r6) must equal the
     definitional keep set {(doc, shingle): df(shingle) <= max_df} — the
     r6 rewrite broadcasts the bounded hot tail instead of the vocabulary-
     sized keep set, and this pins the equivalence on a corpus where the
-    cap actually bites (constructed duplicates push shingle df past it)."""
+    cap actually bites (constructed duplicates push shingle df past it).
+    Null-text documents explode to a NULL shingle, which the keep-set
+    semi-join drops (NULL never joins) and the anti-join must drop too."""
     max_df = 3
+    nulls = spark.createDataFrame(
+        [(30_001, None), (30_002, None)], "doc_id long, text string"
+    )
+    docs = corpus.unionByName(nulls)
     got = {(r["doc_id"], r["shingle"])
-           for r in dd.capped_shingles(corpus, max_df=max_df).collect()}
+           for r in dd.capped_shingles(docs, max_df=max_df).collect()}
     all_sh = [(r["doc_id"], r["shingle"])
-              for r in dd.shingles(corpus).collect()]
+              for r in dd.shingles(docs).collect()]
+    assert (30_001, None) in all_sh  # the NULL shingle really is emitted
     df_count: dict[str, int] = {}
     for _, s in all_sh:
         df_count[s] = df_count.get(s, 0) + 1
-    want = {(d, s) for d, s in all_sh if df_count[s] <= max_df}
+    want = {(d, s) for d, s in all_sh
+            if s is not None and df_count[s] <= max_df}
     assert max(df_count.values()) > max_df  # the cap must actually bite
     assert got == want and len(got) > 0
 

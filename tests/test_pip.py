@@ -244,3 +244,150 @@ def test_general_path_refines_out_of_region_points(spark):
     assert got == expect
     # the interesting rows really are the clamped ones
     assert (1, 2) in got and (1, 3) in got and (1, 4) not in got
+
+
+def _final_plan(df) -> str:
+    """The executed (final adaptive) plan of the last action on ``df``."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_driver_covering_cells_equal_covering_cells_col(spark):
+    """The general path explodes polygon bboxes to covering cells on the
+    driver; its cell ids must equal covering_cells_col (the point side's
+    formula) exactly, including bboxes on cell borders, straddling the
+    region edge and lying wholly outside it."""
+    from pyspark.sql import functions as F
+
+    from distributed_spatial_index_spark.config import DEFAULT_REGION as R
+    from distributed_spatial_index_spark.functions.cells import (
+        covering_cells_col,
+        morton_np,
+    )
+    from distributed_spatial_index_spark.operators.pip_join import (
+        _covering_cells_np,
+    )
+
+    rng = np.random.default_rng(11)
+    lo = rng.uniform([R.x_lo - 500, R.y_lo - 500], [R.x_hi + 200, R.y_hi + 200],
+                     size=(200, 2))
+    hi = lo + rng.uniform(0, 700, size=(200, 2))
+    for bits in (6, 9):
+        w = R.width / (1 << bits)
+        border = np.array([[R.x_lo + 3 * w, R.y_lo], [R.x_lo + 7 * w, R.y_lo + 2 * w]])
+        rects = np.vstack([np.hstack([lo, hi]), border.reshape(1, 4),
+                           [[R.x_hi - 1, R.y_hi - 1, R.x_hi + 50, R.y_hi + 50]],
+                           [[R.x_lo - 90, R.y_lo - 90, R.x_lo - 10, R.y_lo - 10]]])
+        row, cx, cy = _covering_cells_np(
+            rects[:, 0], rects[:, 1], rects[:, 2], rects[:, 3], bits, R
+        )
+        got = sorted(zip(row.tolist(), morton_np(cx, cy, bits).tolist()))
+        df = spark.createDataFrame(
+            [(i, *map(float, r)) for i, r in enumerate(rects)],
+            "i long, xmin double, ymin double, xmax double, ymax double",
+        )
+        want = sorted(
+            (r["i"], r["cell"])
+            for r in df.select("i", F.explode(covering_cells_col(
+                F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
+                bits=bits, region=R,
+            )).alias("cell")).collect()
+        )
+        assert got == want and len(got) > len(rects)
+
+
+def test_auto_past_polygon_guard_still_unrolls(spark, monkeypatch):
+    """Past MAX_DRIVER_POLYGONS the guard collect cannot decide the route:
+    "auto" falls back to the distinct-sizes query, so a single-arity table
+    still takes the unrolled codegen path, and the general path raises."""
+    import pytest
+
+    from distributed_spatial_index_spark.operators import pip_join as pj
+
+    rng = np.random.default_rng(5)
+    n_pts = 2000
+    px = rng.uniform(1000, 3000, n_pts)
+    py = rng.uniform(1000, 3000, n_pts)
+    pts = spark.createDataFrame(
+        [(i, float(px[i]), float(py[i])) for i in range(n_pts)],
+        "id long, x double, y double",
+    )
+    tri = np.array([(0.0, -250.0), (300.0, 200.0), (-280.0, 150.0)])
+    centers = rng.uniform(1400, 2600, size=(4, 2))
+    polys = spark.createDataFrame(
+        [(q, [{"x": float(x), "y": float(y)} for x, y in centers[q] + tri])
+         for q in range(4)],
+        "query_id long, vertices array<struct<x double, y double>>",
+    )
+    monkeypatch.setattr(pj, "MAX_DRIVER_POLYGONS", 2)
+    out = pj.pip_join(pts, polys, bits=6)
+    got = sorted(map(tuple, out.collect()))
+    assert "MapInPandas" not in _final_plan(out)  # unrolled codegen path
+    expect = sorted(
+        (q, i) for q in range(4)
+        for i in np.flatnonzero(ray_cast_np(px, py, centers[q] + tri))
+    )
+    assert got == expect and len(got) > 0
+    with pytest.raises(ValueError, match="MAX_DRIVER_POLYGONS"):
+        pj.pip_join(pts, polys, bits=6, unroll_arity=None)
+
+
+def test_general_path_plan_shape(spark):
+    """The general path reads the polygon frame once per call (the guard
+    collect feeds the driver-side classification), and with no interior
+    cell on the grid's edge it builds no clamped-point branch: the final
+    plan holds exactly one MapInPandas (the refine) over two broadcast
+    joins (direct + boundary).  A polygon with an interior edge cell gets
+    the third, clamped-point join; a sliver with no interior cell at all
+    still joins correctly."""
+    from pyspark.sql import functions as F
+
+    from distributed_spatial_index_spark.config import DEFAULT_REGION as R
+
+    rng = np.random.default_rng(3)
+    n_pts = 3000
+    px = rng.uniform(R.x_lo, R.x_hi, n_pts)
+    py = rng.uniform(R.y_lo, R.y_hi, n_pts)
+    pts = spark.createDataFrame(
+        [(i, float(px[i]), float(py[i])) for i in range(n_pts)],
+        "id long, x double, y double",
+    )
+    ang = np.sort(rng.uniform(0, 2 * np.pi, (3, 14)), axis=1)
+    rings = [np.column_stack((4000 + 900 * q + 700 * np.cos(a),
+                              4000 + 700 * np.sin(a))) for q, a in enumerate(ang)]
+    rings.append(np.array([(8000.3, 4000.7), (9500.3, 4000.7),
+                           (9500.3, 5000.7), (8000.3, 5000.7)]))
+    # a sliver thinner than a cell: no interior cell, empty direct side
+    rings.append(np.array([(500.3, 500.7), (7500.3, 700.7), (500.3, 620.7)]))
+    polys = spark.createDataFrame(
+        [(q, [{"x": float(x), "y": float(y)} for x, y in ring])
+         for q, ring in enumerate(rings)],
+        "query_id long, vertices array<struct<x double, y double>>",
+    )
+    reads = spark.sparkContext.accumulator(0)
+
+    def count_read(q):
+        reads.add(1)
+        return True
+
+    def run(qids):
+        counted = polys.filter(F.col("query_id").isin(qids)).filter(
+            F.udf(count_read, "boolean")("query_id")
+        )
+        out = pip_join(pts, counted, bits=6, unroll_arity=None)
+        got = sorted(map(tuple, out.collect()))
+        expect = sorted(
+            (q, i) for q in qids
+            for i in np.flatnonzero(ray_cast_np(px, py, rings[q]))
+        )
+        assert got == expect and len(got) > 0
+        return _final_plan(out)
+
+    plan = run([0, 1, 2])
+    assert reads.value == 3
+    assert plan.count("MapInPandas") == 1
+    assert plan.count("BroadcastHashJoin") == 2
+    plan = run([3])  # overhangs the right edge: interior cells in column n-1
+    assert plan.count("MapInPandas") == 1
+    assert plan.count("BroadcastHashJoin") == 3
+    run([4])
