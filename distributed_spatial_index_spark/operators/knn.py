@@ -171,7 +171,6 @@ def knn_landed(
         # one pointer resolution serves both artifacts, so they come from
         # the SAME committed version even mid-ingest (metastore.py)
         v = meta_version(path)
-        man = meta_read(spark, path, "manifest", version=v)
         dens = meta_read(spark, path, "density", version=v)
     except ValueError as exc:
         raise ValueError(
@@ -179,7 +178,7 @@ def knn_landed(
             "(write_bucketed_manifest) — knn_landed's whole point is the "
             "committed metadata; run knn() for derive-per-call"
         ) from exc
-    assert_manifest_fresh(spark, points_table, man, spec)
+    assert_manifest_fresh(spark, points_table, spec, version=v)
 
     shift = 2 * (tbits - bits)
     cell = F.shiftright(F.col("cell"), shift) if shift else F.col("cell")

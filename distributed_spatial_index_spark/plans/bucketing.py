@@ -42,6 +42,11 @@ executor count so the scan packs evenly.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -53,10 +58,12 @@ from distributed_spatial_index_spark.config import (
 )
 from distributed_spatial_index_spark.functions.cells import cell_id_col
 from distributed_spatial_index_spark.functions.geometry import rect_contains_point
+from distributed_spatial_index_spark.functions.murmur3 import spark_bucket
 from distributed_spatial_index_spark.operators.range_join import explode_query_cells
 from distributed_spatial_index_spark.sources.metastore import (
     meta_commit,
-    meta_read,
+    meta_read_arrow,
+    meta_version,
 )
 
 
@@ -261,7 +268,7 @@ def _write_spec_file(spark, table: str, path: str, props: dict) -> None:
     from distributed_spatial_index_spark.sources.metastore import _root
 
     cat = spark.table(table)
-    bucket_cols = ["cell", "salt"] if props["dsi.salted"] == "1" else ["cell"]
+    bucket_cols = _bucket_cols(props)
     doc = {
         "props": props,
         "columns": [(f.name, f.dataType.simpleString())
@@ -343,6 +350,25 @@ def attach_bucketed_table(spark: SparkSession, table: str, path: str) -> None:
         _write_spec_file(spark, table, path, props)
 
 
+def _bucket_cols(spec: dict[str, str]) -> list[str]:
+    return ["cell", "salt"] if spec["dsi.salted"] == "1" else ["cell"]
+
+
+def _pcell_shift(spec: dict[str, str]) -> int:
+    """Right shift from the fine cell to its coarse hive partition pcell."""
+    return 2 * (int(spec["dsi.bits"]) - int(spec["dsi.coarse_bits"]))
+
+
+def _spec_path(spec: dict[str, str], table: str) -> str:
+    """The layout path a table's spec records (raises if it records none)."""
+    if "dsi.path" not in spec:
+        raise ValueError(
+            f"table {table} records no dsi.path; rewrite it with the "
+            "current write_bucketed_* functions"
+        )
+    return spec["dsi.path"]
+
+
 def _get_spec(spark, table: str) -> dict[str, str]:
     rows = spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
     spec = {r["key"]: r["value"] for r in rows if r["key"].startswith("dsi.")}
@@ -422,8 +448,7 @@ def _validate_join_tables(spark, points_table, queries_table, eps):
 def _refine_dedup(pts, q, ps, eps):
     """The co-located join body: equi-join on the bucketed key, epsilon
     refine, result-set dedup."""
-    key = ["cell", "salt"] if ps["dsi.salted"] == "1" else ["cell"]
-    joined = pts.join(q, key).filter(
+    joined = pts.join(q, _bucket_cols(ps)).filter(
         rect_contains_point(
             F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
             F.col("x"), F.col("y"), eps,
@@ -472,11 +497,7 @@ def write_bucketed_manifest(spark: SparkSession, table: str) -> None:
     two tiny rollups), so at ingest scale the table is read once, and
     both share one freshness domain (the manifest-vs-listing check)."""
     spec = _get_spec(spark, table)
-    if "dsi.path" not in spec:
-        raise ValueError(
-            f"table {table} records no dsi.path; rewrite it with the "
-            "current write_bucketed_* functions"
-        )
+    path = _spec_path(spec, table)
     from distributed_spatial_index_spark.plans.delete import (
         assert_no_pending_delete,
     )
@@ -484,7 +505,7 @@ def write_bucketed_manifest(spark: SparkSession, table: str) -> None:
     # a crashed copy-on-write delete leaves retained-row copies beside
     # the originals; manifesting that state would double-count — refuse
     # until resume_bucketed_delete settles it
-    assert_no_pending_delete(table, spec["dsi.path"])
+    assert_no_pending_delete(table, path)
     # drop the cached file index: files INSERTed (or illegitimately
     # appended) since the table was last planned must be manifested
     spark.catalog.refreshTable(table)
@@ -492,28 +513,16 @@ def write_bucketed_manifest(spark: SparkSession, table: str) -> None:
         list_data_files,
     )
 
-    files = list_data_files(spark, spec["dsi.path"])
+    files = list_data_files(spark, path)
     if not files:
         raise ValueError(
-            f"table {table} has no data files at {spec['dsi.path']} — "
+            f"table {table} has no data files at {path} — "
             "nothing to manifest"
         )
-    # the full write is just the incremental machinery over EVERY file:
-    # _stats_for_files owns the (file, cell) pre-aggregation and all the
-    # pollution checks (bucket parity, naming, partition span), so the
-    # full / incremental / delete paths cannot drift, and reading by
-    # path (never a bucketed scan) sidesteps the cryptic
-    # INVALID_BUCKET_FILE a polluted path would throw before our check
-    # could name the problem.  pcell is re-derived as the exact integer
-    # prefix of the cell and checked against each file — stricter than
-    # trusting the hive directory value, equal by construction for
-    # tables this module wrote.
-    pcell_type = (
-        dict(spark.table(table).dtypes).get("pcell")
-        if "dsi.coarse_bits" in spec
-        else None
-    )
-    per, man_rows = _stats_for_files(spark, spec, table, files, pcell_type)
+    # _stats_for_files runs the same pollution checks (bucket parity,
+    # naming, partition span) as the incremental repair, so the full and
+    # incremental paths cannot drift
+    per, man_rows = _stats_for_files(spark, spec, table, files)
     try:
         artifacts = {"manifest": man_rows.coalesce(1)}
         if spec.get("dsi.kind") == "points":
@@ -522,7 +531,7 @@ def write_bucketed_manifest(spark: SparkSession, table: str) -> None:
             )
         # one atomic commit for BOTH artifacts (sources/metastore.py): a
         # reader can never pair a fresh manifest with a stale density
-        meta_commit(spec["dsi.path"], artifacts)
+        meta_commit(path, artifacts)
     finally:
         per.unpersist()
 
@@ -551,12 +560,8 @@ def compact_bucketed_table(
     )
 
     spec = _get_spec(spark, table)
-    if "dsi.path" not in spec:
-        raise ValueError(
-            f"table {table} records no dsi.path; rewrite it with the "
-            "current write_bucketed_* functions"
-        )
-    if spec["dsi.path"] == new_path:
+    path = _spec_path(spec, table)
+    if path == new_path:
         raise ValueError(
             "compaction writes a NEW path and swaps (read-old-write-new); "
             "in-place rewrite would race its own scan"
@@ -569,19 +574,16 @@ def compact_bucketed_table(
     # the path DIRECTLY, so an unsettled delete's retained-row copies
     # would be rewritten into the new layout as permanent duplicate DATA
     # (and the journal would not follow the swap)
-    assert_no_pending_delete(table, spec["dsi.path"])
-    files_before = len(list_data_files(spark, spec["dsi.path"]))
+    assert_no_pending_delete(table, path)
+    files_before = len(list_data_files(spark, path))
     # read the OLD files by path, not through the catalog: _write_bucketed
     # drops the catalog entry before writing, and a catalog-resolved plan
     # would re-resolve against the dropped name at action time.  Path
     # reads also make the read-old-write-new contract explicit.
-    df = spark.read.parquet(spec["dsi.path"])
-    bucket_cols = (
-        ["cell", "salt"] if spec["dsi.salted"] == "1" else ["cell"]
-    )
+    df = spark.read.parquet(path)
     partition_cols = ["pcell"] if "dsi.coarse_bits" in spec else []
     _write_bucketed(
-        df, table, new_path, int(spec["dsi.n_buckets"]), bucket_cols,
+        df, table, new_path, int(spec["dsi.n_buckets"]), _bucket_cols(spec),
         partition_cols,
     )
     props = {k: v for k, v in spec.items() if k.startswith("dsi.")}
@@ -599,7 +601,7 @@ def compact_bucketed_table(
         write_stream_commit,
     )
 
-    commit = read_stream_commit(spec["dsi.path"])
+    commit = read_stream_commit(path)
     if commit is not None:
         write_stream_commit(new_path, *commit)
     return files_before, len(list_data_files(spark, new_path))
@@ -607,31 +609,19 @@ def compact_bucketed_table(
 
 def update_bucketed_manifest(spark: SparkSession, table: str) -> int:
     """INCREMENTAL manifest/density maintenance — the Iceberg-snapshot
-    analogue of write_bucketed_manifest: scan ONLY the data files
-    appended since the last manifest write (e.g. by ``INSERT INTO``),
-    verify their bucket parity, and merge their stats into ``_manifest``
-    and ``_density``.  Returns the number of files merged (0 = already
-    fresh).  At the 100-TB design point this is the difference between
-    an append costing a scan of the appended files and an append costing
-    a full-table rescan.
+    analogue of write_bucketed_manifest: read ONLY the data files
+    appended since the last manifest write (e.g. by ``INSERT INTO``) and
+    merge them in with repair_bucketed_metadata (same pollution checks
+    as the full write; no Spark job).  Returns the number of files
+    merged (0 = already fresh).  At the 100-TB design point an append
+    then costs a read of the appended files, not a full-table rescan.
 
-    Removals are NOT incremental: a manifested file gone from disk
-    (compaction, delete) raises toward the full rewrite — per-cell
-    density cannot be un-summed from per-file ranges.  A new file that
-    spans hive partitions or mixes bucket ids raises exactly like the
-    full write (same pollution discipline)."""
-    from distributed_spatial_index_spark.sources.layout import (
-        _norm_file_path,
-        list_data_files,
-    )
+    A manifested file gone from disk raises toward the full rewrite:
+    per-cell density cannot be un-summed from per-file ranges."""
+    from distributed_spatial_index_spark.sources.layout import list_data_files
 
     spec = _get_spec(spark, table)
-    if "dsi.path" not in spec:
-        raise ValueError(
-            f"table {table} records no dsi.path; rewrite it with the "
-            "current write_bucketed_* functions"
-        )
-    path = spec["dsi.path"]
+    path = _spec_path(spec, table)
     from distributed_spatial_index_spark.plans.delete import (
         assert_no_pending_delete,
     )
@@ -641,16 +631,12 @@ def update_bucketed_manifest(spark: SparkSession, table: str) -> int:
     # files still hold the same rows
     assert_no_pending_delete(table, path)
     try:
-        man = meta_read(spark, path, "manifest")
+        known = manifested(meta_read_arrow(path, "manifest"))
     except ValueError as exc:
         raise ValueError(
             f"{table} has no manifest to update; run "
             "write_bucketed_manifest first"
         ) from exc
-    known = {
-        _norm_file_path(r["file_path"])
-        for r in man.select("file_path").collect()
-    }
     listing = list_data_files(spark, path)
     missing = sorted(known - set(listing))
     if missing:
@@ -660,29 +646,133 @@ def update_bucketed_manifest(spark: SparkSession, table: str) -> int:
             "incrementally — re-run write_bucketed_manifest"
         )
     new = [f for f in listing if f not in known]
-    if not new:
-        return 0
-
-    per, man_new = _stats_for_files(
-        spark, spec, table, new, pcell_type=dict(man.dtypes).get("pcell")
-    )
-    try:
-        # merged frames READ the old version and COMMIT as a new one
-        # (sources/metastore.py): read-what-you-overwrite is impossible
-        # by construction, and manifest+density swap atomically as a pair
-        artifacts = {"manifest": man.unionByName(man_new).coalesce(1)}
-        if spec.get("dsi.kind") == "points":
-            artifacts["density"] = (
-                meta_read(spark, path, "density")
-                .unionByName(per.groupBy("cell").agg(F.sum("n").alias("n")))
-                .groupBy("cell")
-                .agg(F.sum("n").alias("n"))
-                .coalesce(1)
-            )
-        meta_commit(path, artifacts)
-    finally:
-        per.unpersist()
+    if new:
+        repair_bucketed_metadata(table, spec, [], new)
     return len(new)
+
+
+def repair_bucketed_metadata(
+    table: str,
+    spec: dict[str, str],
+    removed: list[str],
+    added: list[str],
+    dec: pd.Series | None = None,
+    inc: pd.Series | None = None,
+) -> int:
+    """The ONE incremental metadata repair of append (update_bucketed_
+    manifest, so streaming land), copy-on-write delete and upsert: drop
+    the manifest rows of the ``removed`` files (spelled as the manifest
+    spells them), add rows for the ``added`` files (normalized paths),
+    apply the per-cell density deltas and commit both as ONE version,
+    which it returns.  No Spark job: pyarrow reads the old artifacts and
+    the added files' bucket columns (bounded by the affected bytes) and
+    the commit writes Arrow tables with the old schema.  ``dec``/``inc``
+    count per cell the rows that left/entered the table; ``inc=None``
+    means the added files hold exactly the entering rows (an append).
+    A decrement the density cannot cover means it was stale: raise."""
+    path = spec["dsi.path"]
+    v = meta_version(path)
+    man = meta_read_arrow(path, "manifest", v)
+    drifted = sorted(set(removed) - set(man["file_path"].to_pylist()))
+    if drifted:
+        raise ValueError(
+            f"manifest file_path spelling drifted for {table}: "
+            f"{len(drifted)} affected file(s) missing from the manifest "
+            f"(e.g. {drifted[0]}) — re-run write_bucketed_manifest "
+            "(resume_bucketed_delete settles the journal)"
+        )
+    if removed:
+        man = man.filter(pc.invert(pc.is_in(
+            man["file_path"], value_set=pa.array(removed, pa.string())
+        )))
+    rows, cells = _file_stats(spec, added)
+    _check_file_rows(table, spec, rows)
+    new = pa.Table.from_pydict(
+        {c: rows[c].to_numpy() for c in man.schema.names}, schema=man.schema
+    )
+    arts = {"manifest": pa.concat_tables([man, new])}
+    if spec.get("dsi.kind") == "points":
+        dens = meta_read_arrow(path, "density", v)
+        old = pd.Series(dens["n"].to_numpy(), index=dens["cell"].to_numpy())
+        dec = pd.Series(dtype="int64") if dec is None else dec
+        inc = cells if inc is None else inc
+        n = pd.concat([old, -dec, inc]).groupby(level=0).sum()
+        if (~dec.index.isin(old.index)).any() or (n < 0).any():
+            raise ValueError(
+                f"density summary of {table} disagrees with the removed "
+                "rows (cells missing or over-decremented) — the summary "
+                "was stale despite the freshness check; re-run "
+                "write_bucketed_manifest"
+            )
+        n = n[n > 0]
+        arts["density"] = pa.Table.from_pydict(
+            {"cell": n.index.to_numpy(), "n": n.to_numpy()},
+            schema=dens.schema,
+        )
+    return meta_commit(path, arts)
+
+
+def _file_stats(
+    spec: dict[str, str], files: list[str]
+) -> tuple[pd.DataFrame, pd.Series]:
+    """Per-file manifest rows and per-cell counts of data files, read with
+    pyarrow (bucket columns only); ``bucket``/``_bmax`` are the smallest/
+    largest bucket id under the NumPy port of Spark's hash, and
+    ``file_path`` is spelled as ``_metadata.file_path`` spells it."""
+    n = int(spec["dsi.n_buckets"])
+    cols = _bucket_cols(spec)
+    recs, cells = [], []
+    for f in files:
+        t = pq.ParquetFile(f"/{f}").read(columns=cols)
+        if not t.num_rows:
+            continue
+        b = spark_bucket(n, *(t[c] for c in cols))
+        c = t["cell"].to_numpy()
+        recs.append((f"file:/{f}", b.min(), b.max(), c.min(), c.max(), len(c)))
+        cells.append(c)
+    rows = pd.DataFrame(recs, columns=[
+        "file_path", "bucket", "_bmax", "cell_min", "cell_max", "n_rows"])
+    if "dsi.coarse_bits" in spec:
+        rows["pcell"] = rows["cell_min"].to_numpy() >> _pcell_shift(spec)
+    counts = pd.Series(
+        np.concatenate(cells) if cells else np.empty(0, np.int64)
+    ).value_counts()
+    return rows, counts
+
+
+def _check_file_rows(table: str, spec: dict[str, str], rows: pd.DataFrame):
+    """The pollution checks, in one place, over per-file rows (file_path,
+    bucket, _bmax, cell_min, cell_max) from either stats path: a file sits
+    in one hive partition (its cells share the coarse prefix pcell IS),
+    holds one bucket id, and carries it in Spark's bucket-file name
+    (``..._NNNNN.c000``).  No id in the name means plain parquet was
+    appended to the table path, breaking the bucketed scan itself."""
+    if "dsi.coarse_bits" in spec:
+        shift = _pcell_shift(spec)
+        span = int(np.sum(
+            (rows["cell_min"].to_numpy() >> shift)
+            != (rows["cell_max"].to_numpy() >> shift)
+        ))
+        if span:
+            raise ValueError(
+                f"{span} file(s) of {table} span hive partitions — "
+                "not written by this layout's writers"
+            )
+    name = pd.to_numeric(
+        rows["file_path"].str.extract(r"_(\d{5})\.", expand=False)
+    )
+    bad = int((
+        name.isna()
+        | (rows["bucket"] != rows["_bmax"])
+        | (rows["bucket"] != name)
+    ).sum())
+    if bad:
+        raise ValueError(
+            f"{bad} file(s) of {table} mix bucket ids or disagree with "
+            "the bucket-file naming — not written through the table's "
+            "bucketed writers (INSERT INTO / write_bucketed_*), or the "
+            "bucket-hash parity assumption broke"
+        )
 
 
 def _stats_for_files(
@@ -690,121 +780,72 @@ def _stats_for_files(
     spec: dict[str, str],
     table: str,
     files: list[str],
-    pcell_type: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """(file, cell)-grained stats and parity-checked per-file manifest
-    rows for an EXPLICIT list of data files (normalized paths, as returned
-    by list_data_files).  Shared by incremental manifest maintenance
-    (update_bucketed_manifest) and the copy-on-write delete
-    (plans/delete.py), so the pollution checks — bucket-hash vs filename
-    parity, mixed-bucket files, files spanning hive partitions — have ONE
-    implementation.  Returns ``(per, man_rows)``: ``per`` is the persisted
-    (file, cell) pre-aggregation (it also feeds the density merge; the
-    caller unpersists it), ``man_rows`` matches the committed manifest
-    schema.  ``pcell_type`` is the existing manifest's pcell dtype
-    (required for coarse-partitioned specs so merged column types agree —
-    the hive partition value is not stored inside the files; it is the
-    exact integer prefix of the cell, derived here and REQUIRED to be
-    shared by the whole file)."""
+    """The FULL-scan stats behind write_bucketed_manifest (so compaction
+    too), by Spark, since the density needs a table scan.  The per-file
+    rows are collected once and go through _check_file_rows; reading by
+    path (never a bucketed scan) sidesteps the cryptic INVALID_BUCKET_FILE
+    a polluted path would throw first.  Returns ``(per, man_rows)``: the
+    persisted (file, cell) counts (the caller unpersists them) and the
+    JVM-side manifest frame over them (a createDataFrame relation would
+    pull each partition through a Python worker on every action)."""
     n = int(spec["dsi.n_buckets"])
-    bucket_cols = (
-        ["cell", "salt"] if spec["dsi.salted"] == "1" else ["cell"]
-    )
-    # normalized paths are scheme-stripped; this engine's layouts are
-    # local-or-one-scheme, so a leading slash restores a readable path
+    bucket = F.pmod(F.hash(*_bucket_cols(spec)), F.lit(n))
     df = spark.read.parquet(*[f"/{f}" for f in files])
     per = (
         df.groupBy(
             F.col("_metadata.file_path").alias("file_path"), F.col("cell")
         )
         .agg(
-            F.min(F.pmod(F.hash(*bucket_cols), F.lit(n))).alias("_bmin"),
-            F.max(F.pmod(F.hash(*bucket_cols), F.lit(n))).alias("_bmax"),
+            F.min(bucket).alias("_bmin"),
+            F.max(bucket).alias("_bmax"),
             F.count(F.lit(1)).alias("n"),
         )
         .persist()
     )
-    man_rows = (
-        per.groupBy("file_path")
-        .agg(
-            F.min("_bmin").alias("bucket"),
-            F.max("_bmax").alias("_bmax"),
-            F.min("cell").alias("cell_min"),
-            F.max("cell").alias("cell_max"),
-            F.sum("n").alias("n_rows"),
-        )
-        .withColumn(
-            "_bname",
-            F.nullif(
-                F.regexp_extract(F.col("file_path"), r"_(\d{5})\.", 1),
-                F.lit(""),
-            ).cast("int"),
-        )
+    man_rows = per.groupBy("file_path").agg(
+        F.min("_bmin").alias("bucket"),
+        F.max("_bmax").alias("_bmax"),
+        F.min("cell").alias("cell_min"),
+        F.max("cell").alias("cell_max"),
+        F.sum("n").alias("n_rows"),
     )
-    if "dsi.coarse_bits" in spec:
-        shift = 2 * (int(spec["dsi.bits"]) - int(spec["dsi.coarse_bits"]))
-        man_rows = man_rows.withColumn(
-            "pcell",
-            F.shiftright(F.col("cell_min"), shift).cast(pcell_type),
-        ).withColumn(
-            "_pmax", F.shiftright(F.col("cell_max"), shift)
-        )
-    # ONE action: collect the per-file rows (<= len(files) of them — the
-    # same driver-side scale every manifest op here accepts) and run the
-    # pollution checks in Python; the collect also materializes the
-    # persisted ``per``.  This matters per STREAMING micro-batch: the
-    # check-as-count formulation was three sequential tiny-data jobs, and
-    # job scheduling — not data — dominated the incremental repair.  The
-    # RETURNED frame stays the JVM-side derivation over the cached
-    # ``per`` (NOT a re-created local frame: a createDataFrame relation
-    # is a Python-partition-backed RDD, and a downstream coalesce(1)
-    # commit pulls each of its partitions through a Python-worker
-    # round-trip — measured ~5 s per action on a 128-row manifest).
-    rows = man_rows.collect()
-    if "dsi.coarse_bits" in spec:
-        span = sum(1 for r in rows if r["pcell"] != r["_pmax"])
-        if span:
-            per.unpersist()
-            raise ValueError(
-                f"{span} file(s) of {table} span hive partitions — "
-                "not written by this layout's writers"
-            )
-        man_rows = man_rows.drop("_pmax")
-    bad = sum(
-        1
-        for r in rows
-        if r["_bname"] is None
-        or r["bucket"] != r["_bmax"]
-        or r["bucket"] != r["_bname"]
-    )
-    if bad:
+    try:
+        _check_file_rows(table, spec, man_rows.toPandas())
+    except ValueError:
         per.unpersist()
-        raise ValueError(
-            f"{bad} file(s) of {table} mix bucket ids or disagree with "
-            "the bucket-file naming — not written through the table's "
-            "bucketed writers (INSERT INTO / write_bucketed_*), or the "
-            "bucket-hash parity assumption broke"
+        raise
+    man_rows = man_rows.drop("_bmax")
+    if "dsi.coarse_bits" in spec:
+        man_rows = man_rows.withColumn(
+            "pcell", F.shiftright(F.col("cell_min"), _pcell_shift(spec))
         )
-    return per, man_rows.drop("_bmax", "_bname")
+    return per, man_rows
+
+
+def manifested(man: pa.Table) -> set[str]:
+    """The data files (normalized paths) a manifest records."""
+    from distributed_spatial_index_spark.sources.layout import _norm_file_path
+
+    return {_norm_file_path(f) for f in man["file_path"].to_pylist()}
 
 
 def assert_manifest_fresh(
-    spark: SparkSession, table: str, man: DataFrame, spec: dict[str, str]
-) -> None:
+    spark: SparkSession,
+    table: str,
+    spec: dict[str, str],
+    version: int | None = None,
+) -> pa.Table:
     """Raise if the table path holds data files the manifest doesn't know
-    about (appended since write_bucketed_manifest) — every metadata
-    artifact under <dsi.path> (manifest, density summary) is written by
-    that one pass, so this single check covers them all.  Pure-metadata
-    op: a file listing vs the manifest's file_path column."""
-    from distributed_spatial_index_spark.sources.layout import (
-        _norm_file_path,
-        list_data_files,
-    )
+    about (appended since the last manifest commit) — manifest and
+    density are always committed together, so this single check covers
+    both.  Pure metadata, no Spark job: a file listing vs the manifest's
+    file_path column read with pyarrow.  Returns the manifest (of
+    ``version``, default the current one) it checked."""
+    from distributed_spatial_index_spark.sources.layout import list_data_files
 
-    known = {
-        _norm_file_path(r["file_path"])
-        for r in man.select("file_path").collect()
-    }
+    man = meta_read_arrow(spec["dsi.path"], "manifest", version)
+    known = manifested(man)
     unknown = [
         f for f in list_data_files(spark, spec["dsi.path"]) if f not in known
     ]
@@ -814,6 +855,7 @@ def assert_manifest_fresh(
             f"file(s) missing (e.g. {unknown[0]}); re-run "
             "write_bucketed_manifest"
         )
+    return man
 
 
 def pruned_bucketed_point_range_join(
@@ -846,12 +888,11 @@ def pruned_bucketed_point_range_join(
     directory+bucket-level count, exactly the files the pruned scan opens.
 
     ``with_stats=False`` skips the manifest read, freshness listing, and
-    stats counts — several small DRIVER-SIDE jobs that are pure
-    diagnostics (the scan's correctness never depends on the manifest:
-    it goes through the catalog table, and the prune filters derive from
-    the query table).  At sandbox scale those mini-jobs cost more than
-    the whole join, so the recurring-serving configuration turns them
-    off; keep them on when auditing what a layout is actually skipping.
+    stats counts — pure diagnostics, computed on the driver with no Spark
+    job (the scan's correctness never depends on the manifest: it goes
+    through the catalog table, and the prune filters derive from the
+    query table); keep them on when auditing what a layout is actually
+    skipping.
     """
     ps, qp = _validate_join_tables(spark, points_table, queries_table, eps)
     pts = spark.table(points_table)
@@ -864,7 +905,7 @@ def pruned_bucketed_point_range_join(
     fine_ok = len(wanted) <= max_prune_cells and ps["dsi.salted"] != "1"
     coarse: list[int] | None = None
     if "dsi.coarse_bits" in ps:
-        shift = 2 * (int(ps["dsi.bits"]) - int(ps["dsi.coarse_bits"]))
+        shift = _pcell_shift(ps)
         if len(wanted) <= max_prune_cells:
             coarse = sorted({c >> shift for c in wanted})
         else:
@@ -886,33 +927,23 @@ def pruned_bucketed_point_range_join(
         "fine_pruned": fine_ok,
         "coarse_pruned": coarse is not None,
     }
-    try:
-        man = (
-            meta_read(spark, ps["dsi.path"], "manifest")
-            if with_stats and "dsi.path" in ps
-            else None
-        )
-    except ValueError:
-        man = None
-    if man is not None:
+    if (with_stats and "dsi.path" in ps
+            and meta_version(ps["dsi.path"]) is not None):
         # same freshness discipline as sources/layout.py: a data file the
         # manifest doesn't know about means the stats below would misreport
         # (the scan itself stays correct — it goes through the catalog)
-        assert_manifest_fresh(spark, points_table, man, ps)
-        sel = man
+        man = assert_manifest_fresh(spark, points_table, ps)
+        sel = np.ones(man.num_rows, dtype=bool)
         if coarse is not None:
-            sel = sel.filter(F.col("pcell").isin(coarse))
+            sel &= np.isin(man["pcell"].to_numpy(), coarse)
         if fine_ok:
-            n = int(ps["dsi.n_buckets"])
-            wb = sorted(
-                r["b"]
-                for r in q.select(
-                    F.pmod(F.hash("cell"), F.lit(n)).alias("b")
-                ).distinct().collect()
+            # the landed cell is a bigint, so its bucket is hashLong's
+            wb = spark_bucket(
+                int(ps["dsi.n_buckets"]), np.asarray(wanted, dtype=np.int64)
             )
-            sel = sel.filter(F.col("bucket").isin(wb))
-        stats["files_total"] = man.count()
-        stats["files_scanned"] = sel.count()
+            sel &= np.isin(man["bucket"].to_numpy(), wb)
+        stats["files_total"] = man.num_rows
+        stats["files_scanned"] = int(sel.sum())
     out.prune_stats = stats
     return out
 
@@ -926,16 +957,26 @@ def physical_plan_str(df: DataFrame) -> str:
 
 
 def count_exchanges(df: DataFrame) -> int:
-    """Number of SHUFFLE Exchange operators in the plan — the quantity
-    bucketing exists to minimize.  BroadcastExchange is deliberately NOT
-    counted (a broadcast build is not the per-row shuffle this module
-    optimizes away; pin auto-broadcast off if asserting the shuffled
-    regime), and ReusedExchange references are skipped so a reused shuffle
-    is counted once."""
-    return sum(
-        1
-        for line in physical_plan_str(df).splitlines()
-        if "Exchange" in line
-        and "BroadcastExchange" not in line
-        and "ReusedExchange" not in line
-    )
+    """Number of shuffles (``ShuffleExchangeExec`` nodes) in the plan — the
+    quantity bucketing exists to minimize.  Walks the adaptive plan's
+    CURRENT physical plan: the final one once an action has run (its
+    query stages are stepped into), the initial one before.  A plan
+    string would count every shuffle twice after execution, since it
+    then prints both the final and the initial plan.  BroadcastExchange
+    is deliberately NOT counted (a broadcast build is not the per-row
+    shuffle this module optimizes away; pin auto-broadcast off if
+    asserting the shuffled regime), and a ReusedExchange is a leaf, so a
+    reused shuffle is counted once."""
+    n, todo = 0, [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        else:
+            n += cls == "ShuffleExchangeExec"
+            ch = node.children()
+            todo.extend(ch.apply(i) for i in range(ch.size()))
+    return n

@@ -15,12 +15,13 @@ files are affected).
 
 Protocol (single concurrent writer, like every landed writer here):
 
-1. PLAN — one scan of the matched rows yields the affected file set,
-   the per-(file, cell) deleted counts, and the deleted-row total.  The
-   plan frame is localCheckpoint-ed: step 6 reads it AFTER the matched
-   files are gone, so its lineage must not be recomputable from them.
-   Filter pushdown prunes this scan; a cell-range predicate prunes
-   directories/buckets exactly like the landed joins.
+1. PLAN — one scan of the matched rows, collected to the driver as
+   per-(file, cell) deleted counts, yields the affected file set, the
+   deleted-row total and the density decrements.  Step 6 reads that
+   driver copy AFTER the matched files are gone, so nothing has to be
+   recomputed from them.  Filter pushdown prunes this scan; a
+   cell-range predicate prunes directories/buckets exactly like the
+   landed joins.
 2. JOURNAL phase 1 — ``_delete_pending`` at the table path (temp file +
    atomic rename, the stream-commit pattern) records the affected files
    and the pre-insert listing.  Until the journal clears, the manifest
@@ -34,11 +35,13 @@ Protocol (single concurrent writer, like every landed writer here):
 4. JOURNAL phase 2 — adds the inserted file names.
 5. REMOVE — the affected files are unlinked; the retained copies are
    now those rows' only instance.
-6. REPAIR — one atomic metadata commit (sources/metastore.py): the
-   affected files' manifest rows drop, the inserted files' rows merge
-   in (_stats_for_files — the same pollution checks as ingest), and the
-   density summary decrements by the deleted per-cell counts.  Then the
-   journal clears.
+6. REPAIR — plans/bucketing.repair_bucketed_metadata, the incremental
+   repair every landed writer shares, on the driver with no Spark job:
+   the affected files' manifest rows drop, rows for the inserted files
+   (read with pyarrow, bucket columns only, through the same pollution
+   checks as ingest) merge in, the density summary decrements by the
+   deleted per-cell counts, and both commit as ONE metadata version
+   (sources/metastore.py).  Then the journal clears.
 
 Crash settlement — resume_bucketed_delete handles every window:
 
@@ -65,12 +68,16 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_spatial_index_spark.plans.bucketing import (
+    _bucket_cols,
     _get_spec,
-    _stats_for_files,
+    _spec_path,
+    manifested,
+    repair_bucketed_metadata,
     write_bucketed_manifest,
 )
 from distributed_spatial_index_spark.sources.layout import (
@@ -79,8 +86,7 @@ from distributed_spatial_index_spark.sources.layout import (
     list_data_files,
 )
 from distributed_spatial_index_spark.sources.metastore import (
-    meta_commit,
-    meta_read,
+    meta_read_arrow,
     meta_version,
 )
 
@@ -134,6 +140,25 @@ def assert_no_pending_delete(table: str, path: str) -> None:
         )
 
 
+def require_fresh_manifest(table: str, path: str, listing: list[str]) -> bool:
+    """Whether the layout at ``path`` is manifested — and if it is, raise
+    unless the manifest is EXACTLY fresh against ``listing`` (no unknown
+    and no missing files): the copy-on-write writers' incremental repair
+    assumes the manifest and the data agree.  Reads on the driver."""
+    if meta_version(path) is None:
+        return False
+    known = manifested(meta_read_arrow(path, "manifest"))
+    if known != set(listing):
+        raise ValueError(
+            f"manifest of {table} is not exactly fresh "
+            f"({len(set(listing) - known)} unknown / "
+            f"{len(known - set(listing))} missing file(s)); settle it "
+            "(update_bucketed_manifest / write_bucketed_manifest) first — "
+            "the incremental repair assumes the manifest and the data agree"
+        )
+    return True
+
+
 def delete_from_bucketed_table(
     spark: SparkSession,
     table: str,
@@ -178,12 +203,7 @@ def delete_from_bucketed_table(
         _t0 = now
 
     spec = _get_spec(spark, table)
-    if "dsi.path" not in spec:
-        raise ValueError(
-            f"table {table} records no dsi.path; rewrite it with the "
-            "current write_bucketed_* functions"
-        )
-    path = spec["dsi.path"]
+    path = _spec_path(spec, table)
     if _local_root(path) is None:
         raise NotImplementedError(
             "the copy-on-write delete journal is the local-filesystem "
@@ -200,8 +220,9 @@ def delete_from_bucketed_table(
     # the predicate decides).  A UDF over mutable external state that
     # CLAIMS determinism is on the caller, exactly as it is for a table
     # format's copy-on-write DELETE.
-    probe = spark.table(table).filter(predicate)
-    if not probe._jdf.queryExecution().analyzed().deterministic():
+    df = spark.table(table)
+    matched = df.filter(predicate)
+    if not matched._jdf.queryExecution().analyzed().deterministic():
         raise ValueError(
             "delete predicate is non-deterministic (rand(), shuffle(), a "
             "UDF marked nondeterministic, ...): the copy-on-write delete "
@@ -209,58 +230,31 @@ def delete_from_bucketed_table(
             "corrupt the table"
         )
 
-    man = None
-    try:
-        man = meta_read(spark, path, "manifest")
-    except ValueError:
-        pass
     listing = list_data_files(spark, path)
-    known_raw: set[str] = set()
-    if man is not None:
-        known_raw = {
-            r["file_path"] for r in man.select("file_path").collect()
-        }
-        known = {_norm_file_path(f) for f in known_raw}
-        if known != set(listing):
-            raise ValueError(
-                f"manifest of {table} is not exactly fresh "
-                f"({len(set(listing) - known)} unknown / "
-                f"{len(known - set(listing))} missing file(s)); settle it "
-                "(update_bucketed_manifest / write_bucketed_manifest) "
-                "before deleting — the incremental repair assumes the "
-                "manifest and the data agree"
-            )
-
+    has_manifest = require_fresh_manifest(table, path, listing)
     _mark("preflight")
-    # 1. PLAN: one scan of the matched rows.  localCheckpoint (not
-    # persist): the density decrement in step 6 reads this AFTER the
-    # matched files are unlinked, so a cache eviction must not be able
-    # to recompute the lineage from them.
-    df = spark.table(table)
+    # 1. PLAN: one scan of the matched rows, collected to the driver as
+    # per-(file, cell) counts (at most files x cells rows — the density
+    # summary's own scale).  This one action yields the affected set, the
+    # deleted-row total and the density decrements, and the driver's
+    # copy outlives the unlink in step 5.
     per = (
-        df.filter(predicate)
-        .groupBy(
+        matched.groupBy(
             F.col("_metadata.file_path").alias("file_path"), F.col("cell")
         )
         .agg(F.count(F.lit(1)).alias("n_del"))
-        .localCheckpoint(eager=False)
+        .toPandas()
     )
-    # one action plans everything: the lazy checkpoint materializes under
-    # this per-file rollup, which carries both the affected set and the
-    # deleted-row total (<= len(files) rows on the driver)
-    fstats = (
-        per.groupBy("file_path").agg(F.sum("n_del").alias("n_del")).collect()
-    )
-    affected_raw = sorted(r["file_path"] for r in fstats)
-    if not affected_raw:
+    if per.empty:
         return {
             "files_rewritten": 0,
             "files_new": 0,
             "rows_deleted": 0,
             "meta_version": meta_version(path),
         }
+    affected_raw = sorted(per["file_path"].unique())
     affected_norm = [_norm_file_path(f) for f in affected_raw]
-    rows_deleted = int(sum(r["n_del"] for r in fstats))
+    rows_deleted = int(per["n_del"].sum())
 
     _mark("plan_scan")
     # 2. JOURNAL phase 1: from here on the manifest writers refuse until
@@ -273,23 +267,22 @@ def delete_from_bucketed_table(
     _mark("journal1")
     # 3. INSERT retained.  Read the affected files BY PATH — not through
     # the catalog table, whose relation the insert target would alias —
-    # with basePath so partition discovery recovers pcell.  Repartition
+    # with basePath so partition discovery recovers pcell, and with the
+    # table's schema, which spares the schema-inference job.  Repartition
     # on the bucket columns mirrors ingest: one file per touched bucket
     # instead of tasks x buckets.
-    bucket_cols = (
-        ["cell", "salt"] if spec["dsi.salted"] == "1" else ["cell"]
-    )
     retained = (
         # _local_root (non-None, checked up front) abspaths dsi.path, so
         # a RELATIVE layout path still yields a basePath that prefixes
         # the absolute file paths below
-        spark.read.option("basePath", _local_root(path))
+        spark.read.schema(df.schema)
+        .option("basePath", _local_root(path))
         .parquet(*[f"/{f}" for f in affected_norm])
         .filter(~F.coalesce(predicate, F.lit(False)))
     )
     (
         retained.repartition(
-            int(spec["dsi.n_buckets"]), *[F.col(c) for c in bucket_cols]
+            int(spec["dsi.n_buckets"]), *map(F.col, _bucket_cols(spec))
         )
         .select(*df.columns)
         .write.insertInto(table)
@@ -320,64 +313,16 @@ def delete_from_bucketed_table(
     _mark("remove")
     _chk("remove")
 
-    # 6. REPAIR the metadata incrementally, as ONE atomic commit.  Tiny
-    # frames throughout — the cost discipline here is JOB COUNT, not
-    # data: every check that can run on already-collected driver rows
-    # does, and the two density guards share one action.
-    if man is not None:
-        drifted = [f for f in affected_raw if f not in known_raw]
-        if drifted:
-            raise ValueError(
-                f"manifest file_path spelling drifted for {table}: "
-                f"{len(drifted)} affected file(s) missing from the "
-                f"manifest (e.g. {drifted[0]}) — re-run "
-                "write_bucketed_manifest (resume_bucketed_delete "
-                "settles the journal)"
-            )
-        kept = man.filter(~F.col("file_path").isin(affected_raw))
-        per_new = None
-        try:
-            if new_files:
-                per_new, man_new = _stats_for_files(
-                    spark, spec, table, new_files,
-                    pcell_type=dict(man.dtypes).get("pcell"),
-                )
-                kept = kept.unionByName(man_new)
-            _mark("repair_new_file_stats")
-            artifacts = {"manifest": kept.coalesce(1)}
-            if spec.get("dsi.kind") == "points":
-                dens = meta_read(spark, path, "density")
-                dd = per.groupBy("cell").agg(F.sum("n_del").alias("n_del"))
-                merged = dens.join(dd, "cell", "full_outer").select(
-                    "cell",
-                    (
-                        F.coalesce(F.col("n"), F.lit(0))
-                        - F.coalesce(F.col("n_del"), F.lit(0))
-                    ).alias("n"),
-                    F.col("n").isNull().alias("_orphan"),
-                )
-                g = merged.agg(
-                    F.sum(F.col("_orphan").cast("int")).alias("orphan"),
-                    F.sum((F.col("n") < 0).cast("int")).alias("neg"),
-                ).collect()[0]
-                if g["orphan"] or g["neg"]:
-                    raise ValueError(
-                        f"density summary of {table} disagrees with the "
-                        "deleted rows (cells missing or over-decremented) "
-                        "— the summary was stale despite the freshness "
-                        "check; re-run write_bucketed_manifest"
-                    )
-                artifacts["density"] = (
-                    merged.filter(F.col("n") > 0).drop("_orphan").coalesce(1)
-                )
-                _mark("repair_density_guard")
-            meta_commit(path, artifacts)
-            _mark("repair_commit")
-        finally:
-            # release even on the guard/commit raise paths — a leaked
-            # (file, cell) cache would outlive the failed delete
-            if per_new is not None:
-                per_new.unpersist()
+    # 6. REPAIR the metadata incrementally, as ONE atomic commit on the
+    # driver: the retained rows were counted already, so the density
+    # only loses the deleted rows
+    if has_manifest:
+        repair_bucketed_metadata(
+            table, spec, affected_raw, new_files,
+            dec=per.groupby("cell")["n_del"].sum(),
+            inc=pd.Series(dtype="int64"),
+        )
+        _mark("repair")
     _clear_journal(path)
     _mark("settle")
     return {
@@ -407,12 +352,7 @@ def resume_bucketed_delete(spark: SparkSession, table: str) -> dict:
     delete BEFORE relocating the layout — the same ordering the
     manifest already imposes (attach_bucketed_table docstring)."""
     spec = _get_spec(spark, table)
-    if "dsi.path" not in spec:
-        raise ValueError(
-            f"table {table} records no dsi.path; rewrite it with the "
-            "current write_bucketed_* functions"
-        )
-    path = spec["dsi.path"]
+    path = _spec_path(spec, table)
     j = read_delete_journal(path)
     if j is None:
         return {"resumed": False, "action": "none"}

@@ -25,9 +25,11 @@ insert (shared journal + shared crash settlement):
 1. PLAN — the batch is derived (cell/pcell, exactly as ingest derives
    them) and localCheckpoint-ed, so every later step reads ONE
    materialization of it (a non-deterministic batch source cannot
-   re-roll between the match scan and the insert).  One scan of the
-   table joined to the batch keys yields the affected file set and the
-   per-(file, cell) replaced counts.
+   re-roll between the match scan and the insert); one grouped collect
+   of it gives the key hygiene and the per-cell increments.  One scan
+   of the table joined to the batch keys, collected to the driver,
+   yields the affected file set and the per-(file, cell) replaced
+   counts.
 2. JOURNAL phase 1 — the delete's ``_delete_pending`` journal (op:
    "upsert"), so the manifest writers refuse until the upsert settles
    and a crashed upsert settles through the SAME resume_bucketed_delete
@@ -37,10 +39,12 @@ insert (shared journal + shared crash settlement):
    anti-joined on the batch keys) plus the WHOLE batch, in one
    bucketed INSERT INTO.
 4. JOURNAL phase 2, 5. REMOVE originals — exactly the delete's.
-6. REPAIR — one atomic metadata commit: affected manifest rows drop,
-   new files' rows merge in, and the density summary takes the
-   replaced rows' per-cell decrements AND the batch's per-cell
-   increments — an update that MOVES a point re-cells it correctly.
+6. REPAIR — the delete's: plans/bucketing.repair_bucketed_metadata on
+   the driver, no Spark job, one atomic metadata commit.  Affected
+   manifest rows drop, new files' rows merge in, and the density
+   summary takes the replaced rows' per-cell decrements AND the batch's
+   per-cell increments — an update that MOVES a point re-cells it
+   correctly.
 
 Crash settlement: ``resume_bucketed_delete`` verbatim — phase 1 with no
 committed insert means the table is untouched (re-run the upsert); any
@@ -73,24 +77,23 @@ from pyspark.sql import functions as F
 from distributed_spatial_index_spark.functions.cells import cell_id_col
 from distributed_spatial_index_spark.plans.bucketing import (
     _get_spec,
+    _pcell_shift,
     _region_fingerprint,
-    _stats_for_files,
+    _spec_path,
+    repair_bucketed_metadata,
 )
 from distributed_spatial_index_spark.plans.delete import (
     _clear_journal,
     _write_journal,
     assert_no_pending_delete,
+    require_fresh_manifest,
 )
 from distributed_spatial_index_spark.sources.layout import (
     _local_root,
     _norm_file_path,
     list_data_files,
 )
-from distributed_spatial_index_spark.sources.metastore import (
-    meta_commit,
-    meta_read,
-    meta_version,
-)
+from distributed_spatial_index_spark.sources.metastore import meta_version
 
 from distributed_spatial_index_spark.config import DEFAULT_REGION, Region
 
@@ -149,12 +152,7 @@ def upsert_into_bucketed_table(
         _t0 = now
 
     spec = _get_spec(spark, table)
-    if "dsi.path" not in spec:
-        raise ValueError(
-            f"table {table} records no dsi.path; rewrite it with the "
-            "current write_bucketed_* functions"
-        )
-    path = spec["dsi.path"]
+    path = _spec_path(spec, table)
     if _local_root(path) is None:
         raise NotImplementedError(
             "the copy-on-write journal is the local-filesystem stand-in "
@@ -183,7 +181,8 @@ def upsert_into_bucketed_table(
     assert_no_pending_delete(table, path)
     spark.catalog.refreshTable(table)
 
-    table_cols = spark.table(table).columns
+    target = spark.table(table)
+    table_cols = target.columns
     data_cols = [c for c in table_cols if c not in _DERIVED]
     if set(batch.columns) != set(data_cols):
         raise ValueError(
@@ -196,55 +195,39 @@ def upsert_into_bucketed_table(
             f"key {key!r} is not a data column of {table} ({data_cols})"
         )
 
-    man = None
-    try:
-        man = meta_read(spark, path, "manifest")
-    except ValueError:
-        pass
     listing = list_data_files(spark, path)
-    known_raw: set[str] = set()
-    if man is not None:
-        known_raw = {
-            r["file_path"] for r in man.select("file_path").collect()
-        }
-        known = {_norm_file_path(f) for f in known_raw}
-        if known != set(listing):
-            raise ValueError(
-                f"manifest of {table} is not exactly fresh "
-                f"({len(set(listing) - known)} unknown / "
-                f"{len(known - set(listing))} missing file(s)); settle it "
-                "(update_bucketed_manifest / write_bucketed_manifest) "
-                "before merging"
-            )
+    has_manifest = require_fresh_manifest(table, path, listing)
     _mark("preflight")
 
     # derive + ONE materialization of the batch: every later consumer
-    # (key hygiene, match scan, insert, density increments) reads the
-    # checkpoint, so a non-deterministic batch source cannot re-roll
-    # between the match scan and the insert
+    # (key hygiene, match scan, insert) reads the checkpoint, so a
+    # non-deterministic batch source cannot re-roll between the match
+    # scan and the insert
     bits = int(spec["dsi.bits"])
     newb = batch.withColumn(
         "cell", cell_id_col(F.col("x"), F.col("y"), bits, region)
     )
     if "dsi.coarse_bits" in spec:
         newb = newb.withColumn(
-            "pcell",
-            F.shiftright(
-                F.col("cell"), 2 * (bits - int(spec["dsi.coarse_bits"]))
-            ),
+            "pcell", F.shiftright(F.col("cell"), _pcell_shift(spec))
         )
     newb = newb.localCheckpoint(eager=False)
-    hygiene = newb.agg(
+    # ONE action for the key hygiene AND the density increments: the
+    # per-cell rows carry the counts, the rollup's grand-total row the
+    # batch-wide distinct-key and NULL-key counts
+    g = newb.rollup("cell").agg(
+        F.grouping("cell").alias("total"),
         F.count(F.lit(1)).alias("n"),
         F.count_distinct(F.col(key)).alias("n_keys"),
         F.count_if(F.col(key).isNull()).alias("n_null"),
-    ).collect()[0]
-    batch_n = int(hygiene["n"])
-    if batch_n == 0:
+    ).toPandas()
+    if g.empty:
         return {
             "files_rewritten": 0, "files_new": 0, "rows_replaced": 0,
             "rows_inserted": 0, "meta_version": meta_version(path),
         }
+    hygiene = g[g["total"] == 1].iloc[0]
+    batch_n = int(hygiene["n"])
     if hygiene["n_null"]:
         raise ValueError(
             f"batch holds {hygiene['n_null']} NULL {key}(s): a NULL key "
@@ -256,30 +239,28 @@ def upsert_into_bucketed_table(
             f"{hygiene['n_keys']} distinct): WHEN MATCHED THEN UPDATE is "
             "ambiguous under duplicate source keys — dedup the batch first"
         )
+    inc = g[g["total"] == 0].set_index("cell")["n"]
     _mark("batch_checkpoint")
 
-    # 1. PLAN: one scan of the matched rows.  localCheckpoint, not
-    # persist — the density decrement reads this AFTER the matched files
-    # are unlinked, so its lineage must not be recomputable from them.
+    # 1. PLAN: one scan of the matched rows, collected to the driver as
+    # per-(file, cell) replaced counts (at most files x cells rows): the
+    # affected set, rows_replaced and the density decrements, in a copy
+    # that outlives the unlink in step 5
     bkeys = newb.select(key)
     if batch_n <= MAX_BROADCAST_KEYS:
         bkeys = F.broadcast(bkeys)
-    df = spark.table(table)
     per = (
-        df.select(
+        target.select(
             F.col("_metadata.file_path").alias("file_path"), "cell", key
         )
         .join(bkeys, key)
         .groupBy("file_path", "cell")
         .agg(F.count(F.lit(1)).alias("n_del"))
-        .localCheckpoint(eager=False)
+        .toPandas()
     )
-    fstats = (
-        per.groupBy("file_path").agg(F.sum("n_del").alias("n_del")).collect()
-    )
-    affected_raw = sorted(r["file_path"] for r in fstats)
+    affected_raw = sorted(per["file_path"].unique())
     affected_norm = [_norm_file_path(f) for f in affected_raw]
-    rows_replaced = int(sum(r["n_del"] for r in fstats))
+    rows_replaced = int(per["n_del"].sum())
     _mark("plan_scan")
 
     # 2. JOURNAL phase 1 — the manifest writers refuse until settlement
@@ -296,7 +277,8 @@ def upsert_into_bucketed_table(
     ins = newb.select(*table_cols)
     if affected_norm:
         retained = (
-            spark.read.option("basePath", _local_root(path))
+            spark.read.schema(target.schema)
+            .option("basePath", _local_root(path))
             .parquet(*[f"/{f}" for f in affected_norm])
             .join(bkeys, key, "left_anti")
             .select(*table_cols)
@@ -327,73 +309,14 @@ def upsert_into_bucketed_table(
     _mark("remove")
     _chk("remove")
 
-    # 6. REPAIR the metadata incrementally, as ONE atomic commit
-    if man is not None:
-        drifted = [f for f in affected_raw if f not in known_raw]
-        if drifted:
-            raise ValueError(
-                f"manifest file_path spelling drifted for {table}: "
-                f"{len(drifted)} affected file(s) missing from the "
-                f"manifest (e.g. {drifted[0]}) — re-run "
-                "write_bucketed_manifest (resume_bucketed_delete "
-                "settles the journal)"
-            )
-        kept = man.filter(~F.col("file_path").isin(affected_raw))
-        per_new = None
-        try:
-            if new_files:
-                per_new, man_new = _stats_for_files(
-                    spark, spec, table, new_files,
-                    pcell_type=dict(man.dtypes).get("pcell"),
-                )
-                kept = kept.unionByName(man_new)
-            _mark("repair_new_file_stats")
-            dens = meta_read(spark, path, "density")
-            dd_del = per.groupBy("cell").agg(F.sum("n_del").alias("n_del"))
-            dd_add = newb.groupBy("cell").agg(
-                F.count(F.lit(1)).alias("n_add")
-            )
-            merged = (
-                dens.join(dd_del, "cell", "full_outer")
-                .join(dd_add, "cell", "full_outer")
-                .select(
-                    "cell",
-                    (
-                        F.coalesce(F.col("n"), F.lit(0))
-                        - F.coalesce(F.col("n_del"), F.lit(0))
-                        + F.coalesce(F.col("n_add"), F.lit(0))
-                    ).alias("n"),
-                    # a decrement against a cell the summary never held
-                    (
-                        F.col("n").isNull() & F.col("n_del").isNotNull()
-                    ).alias("_orphan"),
-                )
-            )
-            g = merged.agg(
-                F.sum(F.col("_orphan").cast("int")).alias("orphan"),
-                F.sum((F.col("n") < 0).cast("int")).alias("neg"),
-            ).collect()[0]
-            if g["orphan"] or g["neg"]:
-                raise ValueError(
-                    f"density summary of {table} disagrees with the "
-                    "replaced rows (cells missing or over-decremented) — "
-                    "the summary was stale despite the freshness check; "
-                    "re-run write_bucketed_manifest"
-                )
-            _mark("repair_density_guard")
-            meta_commit(
-                path,
-                {
-                    "manifest": kept.coalesce(1),
-                    "density": merged.filter(F.col("n") > 0)
-                    .drop("_orphan")
-                    .coalesce(1),
-                },
-            )
-            _mark("repair_commit")
-        finally:
-            if per_new is not None:
-                per_new.unpersist()
+    # 6. REPAIR the metadata incrementally, as ONE atomic commit on the
+    # driver: the density loses the replaced rows and gains the batch
+    if has_manifest:
+        repair_bucketed_metadata(
+            table, spec, affected_raw, new_files,
+            dec=per.groupby("cell")["n_del"].sum(), inc=inc,
+        )
+        _mark("repair")
     _clear_journal(path)
     _mark("settle")
     return {

@@ -32,6 +32,14 @@ decides readers have drained.  Single concurrent WRITER assumed, as in
 the table formats' default streaming-ingest topology (two racing
 commits could both claim v(N+1)).
 
+Artifacts are Spark DataFrames (written by a Spark job — the full-scan
+manifest and the index stats, which come out of distributed aggregates)
+or ``pyarrow.Table``s (written by the driver with no job — the incremental
+repairs, whose few hundred rows are computed on the driver).  Both land
+in the same version directory under the same protocol, and both read back
+either way: ``meta_read`` as a DataFrame, ``meta_read_arrow`` as a
+``pa.Table`` without a job.
+
 Local-filesystem stand-in, like the stream-commit marker: on a real
 deployment the table format's metadata layer replaces this file-pointer
 protocol with its own atomic snapshot commit.
@@ -43,6 +51,8 @@ import json
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 _META_DIR = "_meta"
@@ -76,11 +86,11 @@ def _version_dir(path: str, version: int) -> str:
     return os.path.join(_root(path), _META_DIR, f"v{version:06d}")
 
 
-def meta_commit(path: str, dfs: dict[str, DataFrame]) -> int:
-    """Commit ``{name: DataFrame}`` as the layout's metadata, atomically
-    and as ONE unit: every artifact is written under the same new version
-    directory before the pointer moves, so readers can never pair
-    artifacts from different commits.  Returns the committed version.
+def meta_commit(path: str, dfs: dict[str, DataFrame | pa.Table]) -> int:
+    """Commit ``{name: DataFrame | pa.Table}`` as the layout's metadata,
+    atomically and as ONE unit: every artifact is written under the same
+    new version directory before the pointer moves, so readers can never
+    pair artifacts from different commits.  Returns the committed version.
 
     The artifact DataFrames may freely READ the previous version (the
     incremental-merge case): the write target is a brand-new directory,
@@ -88,16 +98,33 @@ def meta_commit(path: str, dfs: dict[str, DataFrame]) -> int:
     localCheckpoint materialization barrier needed."""
     version = (meta_version(path) or 0) + 1
     vdir = _version_dir(path, version)
-    for name, df in dfs.items():
+    for name, art in dfs.items():
         # overwrite: a crash after a previous failed commit may have left
         # a garbage dir at this (never-committed) version number
-        df.write.mode("overwrite").parquet(os.path.join(vdir, name))
+        target = os.path.join(vdir, name)
+        if isinstance(art, pa.Table):
+            shutil.rmtree(target, ignore_errors=True)
+            os.makedirs(target)
+            pq.write_table(art, os.path.join(target, "part-00000.parquet"))
+        else:
+            art.write.mode("overwrite").parquet(target)
     target = os.path.join(_root(path), _PTR_FILE)
     tmp = f"{target}.tmp"
     with open(tmp, "w") as f:
         json.dump({"version": version, "artifacts": sorted(dfs)}, f)
     os.replace(tmp, target)
     return version
+
+
+def _artifact_dir(path: str, name: str, version: int | None) -> str:
+    if version is None:
+        version = meta_version(path)
+    if version is None:
+        raise ValueError(
+            f"layout at {path} has no committed metadata (no "
+            f"{_PTR_FILE}); run its manifest writer first"
+        )
+    return os.path.join(_version_dir(path, version), name)
 
 
 def meta_read(
@@ -108,14 +135,17 @@ def meta_read(
     artifacts pins them all to one commit (resolve meta_version once,
     pass it to every read).  Raises ValueError when nothing was ever
     committed (callers turn that into their own actionable message)."""
-    if version is None:
-        version = meta_version(path)
-    if version is None:
-        raise ValueError(
-            f"layout at {path} has no committed metadata (no "
-            f"{_PTR_FILE}); run its manifest writer first"
-        )
-    return spark.read.parquet(os.path.join(_version_dir(path, version), name))
+    return spark.read.parquet(_artifact_dir(path, name, version))
+
+
+def meta_read_arrow(
+    path: str, name: str, version: int | None = None
+) -> pa.Table:
+    """``meta_read`` on the driver: the artifact as a ``pa.Table``, read
+    with pyarrow — no Spark job, not even the schema-inference one a
+    DataFrame read starts.  For the small metadata the landed writers
+    repair and the freshness checks consult."""
+    return pq.read_table(_artifact_dir(path, name, version))
 
 
 def meta_vacuum(path: str, keep: int = 2) -> int:

@@ -55,6 +55,11 @@ def test_bucketed_join_matches_and_drops_the_shuffle(spark):
             got = sorted(map(tuple, out.collect()))
             expect = sorted(map(tuple, point_range_join(pts, qs).collect()))
             assert got == expect and len(got) > 0
+            # still exactly one shuffle AFTER execution: the walk reads the
+            # final adaptive plan, not the string that prints the final
+            # and the initial plan together
+            assert count_exchanges(out) == 1
+            assert physical_plan_str(out).count("isFinalPlan=true") == 1
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql("DROP TABLE IF EXISTS t_bkt_pts")
@@ -471,6 +476,68 @@ def test_incremental_manifest_update_equals_full_rewrite(spark):
     finally:
         spark.sql("DROP TABLE IF EXISTS t_inc_pts")
         spark.sql("DROP TABLE IF EXISTS t_inc_qc")
+
+
+def test_incremental_manifest_refuses_pollution(spark):
+    """update_bucketed_manifest runs the full write's pollution checks on
+    the files it merges: each of a plain parquet file with no bucket
+    suffix, a file whose ``_NNNNN`` name disagrees with its rows' bucket,
+    and a file spanning two ``pcell`` values, dropped into the table
+    path, makes the incremental repair refuse — and once it is removed,
+    the manifest is fresh again."""
+    import os
+    import re
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from distributed_spatial_index_spark.plans.bucketing import (
+        update_bucketed_manifest,
+        write_bucketed_manifest,
+    )
+    from distributed_spatial_index_spark.sources.layout import list_data_files
+
+    pts = src.geo_points(spark, SF_DIR, "lineitem")
+    try:
+        with tempfile.TemporaryDirectory() as d:
+            write_bucketed_points(
+                pts, "t_pol_pts", f"{d}/pts", n_buckets=4, coarse_bits=2
+            )
+            write_bucketed_manifest(spark, "t_pol_pts")
+            files = ["/" + f for f in list_data_files(spark, f"{d}/pts")]
+
+            def bucket(f):
+                return int(re.search(r"_(\d{5})\.", f).group(1))
+
+            first = files[0]
+            b, pdir = bucket(first), os.path.dirname(first)
+            rows = pq.ParquetFile(first).read()
+            # a same-bucket file from another hive partition: together
+            # the two hold one bucket id but two pcell values
+            other = next(
+                f for f in files
+                if bucket(f) == b and os.path.dirname(f) != pdir
+            )
+            span = pa.concat_tables([rows, pq.ParquetFile(other).read()])
+            cases = [
+                ("plain.parquet", rows, "bucket-file naming"),
+                (f"part-x_{(b + 1) % 4:05d}.c000.parquet", rows,
+                 "bucket-file naming"),
+                (f"part-y_{b:05d}.c000.parquet", span,
+                 "span hive partitions"),
+            ]
+            for name, tbl, msg in cases:
+                polluted = os.path.join(pdir, name)
+                pq.write_table(tbl, polluted)
+                try:
+                    with pytest.raises(ValueError, match=msg):
+                        update_bucketed_manifest(spark, "t_pol_pts")
+                finally:
+                    os.remove(polluted)
+            assert update_bucketed_manifest(spark, "t_pol_pts") == 0
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_pol_pts")
 
 
 def test_attach_bucketed_table_after_catalog_loss(spark):

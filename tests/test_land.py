@@ -71,6 +71,24 @@ def test_stream_landed_table_serves_all_landed_readers(spark):
                 spark, "t_land_pts", kq, k=3).collect()))
             assert a == b and len(a) > 0
 
+            # the per-batch incremental repair == a full recompute over
+            # the same files (manifest AND density)
+            from distributed_spatial_index_spark.plans.bucketing import (
+                write_bucketed_manifest,
+            )
+            from distributed_spatial_index_spark.sources.metastore import (
+                meta_read,
+            )
+
+            def snap():
+                return [sorted(map(tuple, meta_read(
+                    spark, f"{d}/pts", name).collect()))
+                    for name in ("manifest", "density")]
+
+            inc = snap()
+            write_bucketed_manifest(spark, "t_land_pts")
+            assert inc == snap()
+
             # compaction pays down the stream's file-count debt: fewer
             # files, same spec, same answers, fresh manifest — and the
             # landed readers keep working on the swapped table

@@ -302,3 +302,52 @@ def test_upsert_crash_windows_settle(spark, window):
         assert dens == sorted(
             map(tuple, meta_read(spark, path, "density").collect())
         )
+
+
+def _count_jobs(spark, fn, gid):
+    """(fn(), number of Spark jobs fn started), counted under job group
+    ``gid``; the caller's job group is restored afterwards."""
+    sc = spark.sparkContext
+    outer = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", outer)
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+# Spark jobs one upsert into a manifested table runs here (measured at
+# this shape: 8, down from 31 while the metadata repair ran on Spark):
+# 3 for the batch's key hygiene and per-cell increments, 2 for the plan
+# scan, 3 for the bucketed insert.  Recount when changing the protocol.
+MAX_UPSERT_JOBS = 8
+
+
+def test_upsert_job_count_pin(spark, monkeypatch):
+    """The metadata repair runs on the driver and starts no Spark job, and
+    one upsert on a manifested table stays within MAX_UPSERT_JOBS."""
+    import distributed_spatial_index_spark.plans.upsert as ups
+
+    real = ups.repair_bucketed_metadata
+    repair_jobs = []
+
+    def counted(*args, **kwargs):
+        out, n = _count_jobs(
+            spark, lambda: real(*args, **kwargs), "ups-pin-repair"
+        )
+        repair_jobs.append(n)
+        return out
+
+    monkeypatch.setattr(ups, "repair_bucketed_metadata", counted)
+    with tempfile.TemporaryDirectory() as d:
+        pts, path = _land(spark, d)
+        # a local batch, so its own lineage starts no job inside the count
+        batch = spark.createDataFrame(_batch(spark, pts).toPandas())
+        stats, n_jobs = _count_jobs(
+            spark, lambda: upsert_into_bucketed_table(spark, PTS, batch),
+            "ups-pin",
+        )
+        assert stats["rows_replaced"] == 40
+        assert repair_jobs == [0]
+        assert n_jobs <= MAX_UPSERT_JOBS, (n_jobs, stats["timings"])
